@@ -36,19 +36,14 @@ object Bench {
     * suite whose median checkpoint sits at ~1.8 is in the slow regime and
     * its numbers are 3× pessimistic — exactly what `contention_index`
     * now says (≈5) and what the rerun gate acts on.
+    *
+    * The rerun gate opens on every sf0.1 run, whatever the host. On a host
+    * whose per-core speed differs from the calibration host's, the ratio
+    * is off by that factor and the gate can fire spuriously, doubling
+    * suite runtime (ADVICE r5). The index itself is printed everywhere:
+    * within one session it remains a valid RELATIVE signal.
     */
   val CanaryRefSec = 0.35
-  /** Host marker the [[CanaryRefSec]] calibration belongs to. On any OTHER
-    * machine the ratio against 0.35 is meaningless and the rerun gate could
-    * fire spuriously, silently doubling suite runtime (ADVICE r5) — so the
-    * gate opens only when the current host matches this marker (or the
-    * caller recalibrates via SPARK_GRAFT_CANARY_REF, which both sets the
-    * reference and marks the run calibrated). The index itself is still
-    * printed everywhere: within one session it remains a valid RELATIVE
-    * signal.
-    */
-  val CalibratedHost = "vm"
-  val CalibratedCpus = 32
   /** Samples per canary checkpoint; median kept (see [[CanaryRefSec]]). */
   val CanaryRunsPerCheckpoint = 3
   /** Queries between canary checkpoints — dense enough that a regime flip

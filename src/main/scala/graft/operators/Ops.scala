@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -223,6 +223,14 @@ object Ops {
       out: String, partitions: Int = 0): DataFrame =
     ntileExactMulti(df, n, Seq(metric -> out), tiebreak, partitions)
 
+  /** Rows per range partition of [[ntileExactMulti]]'s rank shuffles:
+    * `spark.graft.rank.rowsPerPartition`, or 1,000,000 when that is unset,
+    * malformed or not positive — a bad override never fails the query.
+    */
+  def rankRowsPerPartition(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.rank.rowsPerPartition")
+      .flatMap(_.trim.toLongOption).filter(_ > 0).getOrElse(1000000L)
+
   /** [[ntileExact]] for SEVERAL independent metrics over one frame: ONE
     * census pass (count + per-metric null/NaN guard), then one
     * [[rankExact]] per metric — each its own sampled-CDF range shuffle
@@ -276,8 +284,7 @@ object Ops {
     // partitions than the session constant. Rank values are exact under
     // any partitioning, so results are unchanged. Explicit `partitions`
     // wins; rows-per-partition overridable for experiments.
-    val rowsPerPart = sys.props.get("graft.rank.rowsPerPartition")
-      .map(_.toLong).getOrElse(1000000L)
+    val rowsPerPart = rankRowsPerPartition(df.sparkSession)
     val p =
       if (partitions > 0) partitions
       else math.max(1L, math.min((c + rowsPerPart - 1) / rowsPerPart, 65536L)).toInt
@@ -510,12 +517,22 @@ object Ops {
     // job that finalizes a lazy local checkpoint (partitions it skipped
     // would lose their lineage and fail the next round). Reliable mode
     // checkpoints everything eagerly to survive executor loss.
-    def materialize(df: DataFrame): DataFrame =
+    // Every superstep is released once the loop ends, except the final
+    // one the result reads (its lineage is truncated): a query pins one
+    // superstep's blocks, not every round's until GC finds them.
+    val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def pin(m: DataFrame): DataFrame = { pinned += m; m }
+    def materialize(df: DataFrame): DataFrame = pin(
       if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(false)
-    def materializeEager(df: DataFrame): DataFrame =
+      else df.localCheckpoint(false))
+    def materializeEager(df: DataFrame): DataFrame = pin(
       if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
+      else df.localCheckpoint(true))
+    def releaseAllBut(keep: DataFrame): Unit =
+      pinned.filterNot(_ eq keep).foreach(_.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+        case _ => ()
+      })
     val Seq(srcC, dstC) = edges0.columns.toSeq.take(2).map(col)
     // symmetrize in ONE pass over the (possibly expensive) edge plan
     val edges = materialize(edges0
@@ -528,6 +545,7 @@ object Ops {
         .select(col("v"), least(col("v"), col("m")).as("p")))
     var converged = false
     var round = 0
+    var last: DataFrame = null
     while (!converged && round < maxRounds) {
       round += 1
       val nbrMin = edges.join(labels.select(col("v").as("dst"), col("p")), "dst")
@@ -542,7 +560,9 @@ object Ops {
           coalesce(col("y.pp"), col("x.p")).as("p")))
       converged = doubled.filter(col("p") =!= col("p0")).isEmpty
       labels = doubled.select(col("v"), col("p"))
+      last = doubled
     }
+    releaseAllBut(last)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not reach the label fixpoint in $maxRounds " +
         "rounds — labels would be wrong for deep components; raise maxRounds " +

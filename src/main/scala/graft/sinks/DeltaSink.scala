@@ -4436,33 +4436,21 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       entry
     case _ =>
       val target = new File(tableDir, rel)
-      target.getParentFile.mkdirs()
+      Files.createDirectories(target.getParentFile.toPath) // safe under concurrent publishers
       Files.move(src.toPath, target.toPath)
       toAddEntry(tableDir, target, conf)
   }
 
   /** Publishes every staged file under `staging` into the table with
-    * `relOf(rel, i)`-named targets. A publication failure (a part upload
-    * 500ing, the store unreachable) RECLAIMS the files already published
-    * in this batch before rethrowing — the reference's whole-write abort
-    * (delta_destination.rs:120-229): an uncommitted transaction leaves
-    * zero bytes behind.
+    * `relOf(rel, i)`-named targets, concurrently. A publication failure (a
+    * part upload 500ing, the store unreachable) RECLAIMS every file of the
+    * batch that did land before rethrowing ([[Publish.all]]).
     */
   private def publishAll(store: CommitStore, tableDir: File, staging: File,
-      conf: Configuration, relOf: (java.nio.file.Path, Int) => String): Seq[AddEntry] = {
-    val published = scala.collection.mutable.ArrayBuffer[AddEntry]()
-    try {
-      dataFiles(staging).zipWithIndex.foreach { case (src, i) =>
-        val rel = staging.toPath.relativize(src.toPath)
-        published += publishFile(store, tableDir, src, relOf(rel, i), conf)
-      }
-      published.toSeq
-    } catch { case e: Throwable =>
-      published.foreach(a =>
-        scala.util.Try(deleteData(store, tableDir, a.path)))
-      throw e
-    }
-  }
+      conf: Configuration, relOf: (java.nio.file.Path, Int) => String): Seq[AddEntry] =
+    Publish.all(dataFiles(staging).zipWithIndex) { case (src, i) =>
+      publishFile(store, tableDir, src, relOf(staging.toPath.relativize(src.toPath), i), conf)
+    }(a => deleteData(store, tableDir, a.path))
 
   /** Abort-path reclaim of a published-but-uncommitted data file. */
   private def deleteData(store: CommitStore, tableDir: File, rel: String): Unit =

@@ -812,18 +812,7 @@ object IcebergSink {
       }
     // publish staged data files through the store (multipart, whole-write
     // abort on failure: uploaded files are reclaimed before rethrow)
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try dataFiles.foreach { f =>
-        val target = tablePathOf(f)
-        os.putObject(java.nio.file.Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p =>
-          scala.util.Try(os.deleteObject(java.nio.file.Paths.get(p))))
-        throw e
-      }
-    }
+    objStore.foreach(os => Publish.files(os, dataFiles.toSeq.map(f => f -> tablePathOf(f))))
     // partition spec (Iceberg spec §partitioning): field-ids from 1000,
     // source-id = the schema field id of the SOURCE column (for a hidden
     // day() transform that is the timestamp column, not the derived name).
@@ -2945,15 +2934,9 @@ object IcebergSink {
       return meta.get("refs").get(branch).get("snapshot-id").asLong()
     }
     objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try parts.foreach { f =>
-        val target = new File(s"$table/$dataRel", f.getName).getAbsolutePath
-        os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        deleteTree(new File(dataStage)); throw e
-      }
+      try Publish.files(os,
+        parts.map(f => f -> new File(s"$table/$dataRel", f.getName).getAbsolutePath))
+      catch { case e: Throwable => deleteTree(new File(dataStage)); throw e }
     }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val emptySpec = """{"spec-id":0,"fields":[]}"""
@@ -3929,16 +3912,8 @@ object IcebergSink {
     val deletedRows = infos.map(_.recordCount).sum
     // publish staged delete files through the store protocol
     objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try parts2.foreach { f =>
-        val target = tablePathOf(f)
-        os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        deleteTree(stageRoot)
-        throw e
-      }
+      try Publish.files(os, parts2.map(f => f -> tablePathOf(f)))
+      catch { case e: Throwable => deleteTree(stageRoot); throw e }
     }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
@@ -3988,13 +3963,9 @@ object IcebergSink {
           }
         }
       objStore.foreach { os =>
-        val published = scala.collection.mutable.ArrayBuffer[String]()
-        try repParts.foreach { f =>
-          val target = new File(s"$table/$repRel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-        } catch { case e: Throwable =>
-          published.foreach(pp => scala.util.Try(os.deleteObject(Paths.get(pp))))
+        try Publish.files(os,
+          repParts.map(f => f -> new File(s"$table/$repRel", f.getName).getAbsolutePath))
+        catch { case e: Throwable =>
           deleteTree(new File(repStage)); deleteTree(stageRoot)
           throw e
         }
@@ -4154,14 +4125,11 @@ object IcebergSink {
       return 0L
     }
     objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try (dataParts.map((_, dataRel)) ++ delParts.map((_, delRel))).foreach {
-        case (f, rel) =>
-          val target = new File(s"$table/$rel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
+      try Publish.files(os,
+        (dataParts.map((_, dataRel)) ++ delParts.map((_, delRel))).map { case (f, rel) =>
+          f -> new File(s"$table/$rel", f.getName).getAbsolutePath
+        })
+      catch { case e: Throwable =>
         deleteTree(new File(dataStage)); deleteTree(new File(delStage))
         throw e
       }
@@ -4300,15 +4268,10 @@ object IcebergSink {
     }
     // publish staged files through the store (whole-write abort on failure)
     objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try staged.foreach { case (_, rel, _, parts, _) =>
-        parts.foreach { f =>
-          val target = new File(s"$table/$rel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-        }
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
+      try Publish.files(os, staged.flatMap { case (_, rel, _, parts, _) =>
+        parts.map(f => f -> new File(s"$table/$rel", f.getName).getAbsolutePath)
+      })
+      catch { case e: Throwable =>
         staged.foreach(s => deleteTree(new File(s._3)))
         throw e
       }

@@ -3,10 +3,13 @@ package graft.sources
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{Decimal, DecimalType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** A pluggable batch source: the interface the reference's P1 source slot
   * implies (`PgArrowSource` produces schema + record batches,
@@ -28,51 +31,117 @@ trait Source {
   * by field count −1. Field bytes decode through the property-tested
   * [[PgTypeMapping]] contract — J2000 epoch rebase for dates/timestamps,
   * base-10000 truncating numeric decode.
+  *
+  * Like the reference, which appends each field to a typed Arrow column
+  * builder (pg_arrow_source.rs:256-268), every field is written straight
+  * into Spark's internal row format: no per-field JVM object and no
+  * external-row conversion.
   */
 object CopyBinary {
 
   val Signature: Array[Byte] =
     Array('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xFF.toByte, '\r', '\n', 0x00).map(_.toByte)
 
-  /** One wire field value → the Spark external value for its PG type. */
-  private[sources] def fieldDecoder(pgType: String, typmod: Int): Array[Byte] => Any = {
-    def bb(b: Array[Byte]) = ByteBuffer.wrap(b) // big-endian by default
-    def micros(us: Long): (Long, Int) =
-      (Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt)
+  /** Writes one column's non-NULL wire field, `len` bytes at `pos` of
+    * `src`, into ordinal `i` of the row being built. `width` is the wire
+    * size of a fixed-width type, −1 for variable-width ones.
+    */
+  private abstract class FieldWriter(val width: Int) {
+    def write(src: ByteBuffer, pos: Int, len: Int, w: UnsafeRowWriter, i: Int): Unit
+    def writeNull(w: UnsafeRowWriter, i: Int): Unit = w.setNullAt(i)
+  }
+
+  /** The writer for one column, picked once from its Postgres type.
+    * `nullOnOverflow` is what a numeric exceeding its declared precision
+    * becomes: NULL, or (ANSI mode) an `ArithmeticException`, as Spark's own
+    * decimal conversion decides.
+    */
+  private def fieldWriter(pgType: String, typmod: Int, nullOnOverflow: Boolean): FieldWriter =
     pgType match {
-      case "bool" => b => b(0) != 0
-      case "char" => b => b(0)
-      case "int2" => b => bb(b).getShort
-      case "int4" => b => bb(b).getInt
-      case "int8" => b => bb(b).getLong
-      case "float4" => b => bb(b).getFloat
-      case "float8" => b => bb(b).getDouble
-      case "timestamp" => b => {
-        val (s, n) = micros(PgTypeMapping.rebaseMicros(bb(b).getLong))
-        LocalDateTime.ofEpochSecond(s, n, ZoneOffset.UTC)
+      case "bool" => new FieldWriter(1) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.get(p) != 0)
       }
-      case "timestamptz" => b => {
-        val (s, n) = micros(PgTypeMapping.rebaseMicros(bb(b).getLong))
-        Instant.ofEpochSecond(s, n)
+      case "char" => new FieldWriter(1) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.get(p))
       }
-      case "date" => b => LocalDate.ofEpochDay(PgTypeMapping.rebaseDays(bb(b).getInt).toLong)
-      case "numeric" => b => {
-        val scale =
-          if (typmod >= 4) PgTypeMapping.numericTypmodScale(typmod) else 18
-        new java.math.BigDecimal(
-          PgTypeMapping.pgNumericToUnscaled(b, scale).bigInteger, scale)
+      case "int2" => new FieldWriter(2) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.getShort(p))
       }
-      case "text" | "varchar" | "bpchar" => b => new String(b, StandardCharsets.UTF_8)
-      case "bytea" => b => b
+      case "int4" => new FieldWriter(4) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.getInt(p))
+      }
+      case "int8" => new FieldWriter(8) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.getLong(p))
+      }
+      case "float4" => new FieldWriter(4) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.getFloat(p))
+      }
+      case "float8" => new FieldWriter(8) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.getDouble(p))
+      }
+      case "timestamp" | "timestamptz" => new FieldWriter(8) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, PgTypeMapping.rebaseMicros(b.getLong(p)))
+      }
+      case "date" => new FieldWriter(4) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, PgTypeMapping.rebaseDays(b.getInt(p)))
+      }
+      case "numeric" =>
+        val dt = PgTypeMapping.sparkTypeFor(pgType, typmod).asInstanceOf[DecimalType]
+        val (precision, scale) = (dt.precision, dt.scale)
+        // Spark's own conversion of the exact value: NULL or an error on
+        // overflow, and the 16-byte representation above 18 digits
+        def exact(b: ByteBuffer, p: Int, n: Int): Decimal = {
+          val unscaled = PgTypeMapping.pgNumericToUnscaled(
+            java.util.Arrays.copyOfRange(b.array, p, p + n), scale)
+          GraftColumnBridge.toPrecision(Decimal(new java.math.BigDecimal(unscaled.bigInteger, scale)),
+            precision, scale, nullOnOverflow)
+        }
+        if (precision <= Decimal.MAX_LONG_DIGITS) new FieldWriter(-1) {
+          private val bound = BigInt(10).pow(precision).toLong
+          def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit = {
+            val v = PgTypeMapping.pgNumericToUnscaledLong(b.array, p, n, scale)
+            if (v != PgTypeMapping.UnscaledOverflow && math.abs(v) < bound) w.write(i, v)
+            else w.write(i, exact(b, p, n), precision, scale)
+          }
+        } else new FieldWriter(-1) {
+          def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+            w.write(i, exact(b, p, n), precision, scale)
+          // a wide decimal keeps its 16-byte slot when NULL
+          override def writeNull(w: UnsafeRowWriter, i: Int): Unit =
+            w.write(i, null: Decimal, precision, scale)
+        }
+      case "text" | "varchar" | "bpchar" => new FieldWriter(-1) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          // well-formed UTF-8 is stored as is; malformed bytes get Java's
+          // U+FFFD replacement, as a String round trip would give them
+          if (UTF8String.fromBytes(b.array, p, n).isValid) w.write(i, b.array, p, n)
+          else w.write(i, UTF8String.fromString(new String(b.array, p, n, StandardCharsets.UTF_8)))
+      }
+      case "bytea" => new FieldWriter(-1) {
+        def write(b: ByteBuffer, p: Int, n: Int, w: UnsafeRowWriter, i: Int): Unit =
+          w.write(i, b.array, p, n)
+      }
       case other => throw new IllegalArgumentException(
         s"Unsupported Postgres type '$other'. Cast the column to text in the query.")
     }
-  }
 
-  /** Lazily decodes one COPY BINARY stream into external-typed Rows.
-    * `cols` are (name, pgType, typmod) as [[PgTypeMapping.toSchema]] takes.
+  /** Lazily decodes one COPY BINARY stream into Catalyst rows. `cols` are
+    * (name, pgType, typmod) as [[PgTypeMapping.toSchema]] takes.
+    *
+    * Every `next()` returns the SAME row object, refilled: a caller that
+    * keeps rows beyond the next call (collects, buffers, sorts) must
+    * `copy()` each one first.
     */
-  def decode(bytes: Array[Byte], cols: Seq[(String, String, Int)]): Iterator[Row] = {
+  def decode(bytes: Array[Byte], cols: Seq[(String, String, Int)]): Iterator[InternalRow] = {
     val buf = ByteBuffer.wrap(bytes)
     val sig = new Array[Byte](Signature.length)
     buf.get(sig)
@@ -80,27 +149,35 @@ object CopyBinary {
     buf.getInt // flags: bit 16 = OIDs included (never set by modern PG)
     val extLen = buf.getInt
     buf.position(buf.position() + extLen)
-    val decoders = cols.map { case (_, t, m) => fieldDecoder(t, m) }.toArray
+    val nullOnOverflow = !SQLConf.get.ansiEnabled
+    val writers = cols.map { case (_, t, m) => fieldWriter(t, m, nullOnOverflow) }.toArray
+    val row = new UnsafeRowWriter(writers.length)
 
-    new Iterator[Row] {
+    new Iterator[InternalRow] {
       private var nFields: Int = buf.getShort.toInt
       override def hasNext: Boolean = nFields != -1
-      override def next(): Row = {
-        require(nFields == decoders.length,
-          s"tuple has $nFields fields, schema has ${decoders.length}")
-        val vals = new Array[Any](decoders.length)
+      override def next(): InternalRow = {
+        require(nFields == writers.length,
+          s"tuple has $nFields fields, schema has ${writers.length}")
+        row.reset()
+        row.zeroOutNullBytes()
         var i = 0
-        while (i < decoders.length) {
+        while (i < writers.length) {
           val len = buf.getInt
-          if (len >= 0) {
-            val b = new Array[Byte](len)
-            buf.get(b)
-            vals(i) = decoders(i)(b)
+          val fw = writers(i)
+          if (len < 0) fw.writeNull(row, i)
+          else {
+            if (len > buf.remaining()) throw new java.nio.BufferUnderflowException
+            require(fw.width < 0 || len == fw.width,
+              s"field ${cols(i)._1} has $len bytes, its type takes ${fw.width}")
+            val pos = buf.position()
+            fw.write(buf, pos, len, row, i)
+            buf.position(pos + len)
           }
           i += 1
         }
         nFields = if (buf.remaining() >= 2) buf.getShort.toInt else -1
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
+        row.getRow
       }
     }
   }
@@ -496,6 +573,8 @@ final case class PgSocketTransport(host: String, port: Int, user: String,
   * BETWEEN lo AND hi) TO STDOUT (FORMAT BINARY)` export produces at
   * scale. Transports are recorded files ([[FileTransport]]) or live
   * sockets ([[PgSocketTransport]]); the wire decode is identical.
+  * [[CopyBinary.decode]] yields Catalyst rows, so the frame is built over
+  * them directly; Spark's scan copies each reused row as it reads it.
   */
 final case class PgCopyBinarySource(transports: Seq[CopyTransport],
     cols: Seq[(String, String, Int)]) extends Source {
@@ -508,7 +587,7 @@ final case class PgCopyBinarySource(transports: Seq[CopyTransport],
     val rows = spark.sparkContext
       .parallelize(transports, transports.size)
       .flatMap(t => CopyBinary.decode(t.copyOut(), colsB))
-    spark.createDataFrame(rows, schema)
+    GraftColumnBridge.fromInternalRows(spark, rows, schema)
   }
 }
 

@@ -85,14 +85,7 @@ object PgTypeMapping {
     def s16(i: Int): Int = u16(i).toShort.toInt
     val ndigits = u16(0)
     val weight = s16(2)
-    val sign = u16(4) match {
-      case NumericPos => BigInt(1)
-      case NumericNeg => BigInt(-1)
-      case NumericNaN => throw new IllegalArgumentException("Cannot convert numeric NaN")
-      case NumericPInf => throw new IllegalArgumentException("Cannot convert numeric +Inf")
-      case NumericNInf => throw new IllegalArgumentException("Cannot convert numeric -Inf")
-      case other => throw new IllegalArgumentException(s"Unexpected numeric sign: $other")
-    }
+    val sign = BigInt(numericSign(u16(4)))
     require(buf.length - 8 >= 2 * ndigits, "Not enough digits in numeric buffer")
     var abs = BigInt(0)
     var i = 0
@@ -108,5 +101,51 @@ object PgTypeMapping {
       i += 1
     }
     abs * sign
+  }
+
+  /** Returned by [[pgNumericToUnscaledLong]] when the result has more than
+    * 18 digits. No 18-digit value equals it.
+    */
+  val UnscaledOverflow: Long = Long.MinValue
+
+  private val Pow10: Array[Long] = Array.iterate(1L, 19)(_ * 10L)
+
+  /** [[pgNumericToUnscaled]] for the `len` bytes at `off` of `buf`, in a
+    * `Long` and without `BigInt`: the same truncation, the same checks and
+    * NaN/±Inf rejection. Returns [[UnscaledOverflow]] when the truncated
+    * result's magnitude is 10^18 or more.
+    */
+  def pgNumericToUnscaledLong(buf: Array[Byte], off: Int, len: Int, resultScale: Int): Long = {
+    require(len >= 8, "Numeric buffer not long enough")
+    def u16(i: Int): Int = ((buf(off + i) & 0xff) << 8) | (buf(off + i + 1) & 0xff)
+    val ndigits = u16(0)
+    val weight = u16(2).toShort.toInt
+    val sign = numericSign(u16(4))
+    require(len - 8 >= 2 * ndigits, "Not enough digits in numeric buffer")
+    var abs = 0L
+    var i = 0
+    while (i < ndigits) {
+      val digit = u16(8 + 2 * i)
+      val dweight = 4 * (weight - i) + resultScale
+      if (dweight <= -4) ()
+      else if (dweight < 0) abs += digit / Pow10(-dweight).toInt
+      else if (dweight >= 18) { if (digit != 0) return UnscaledOverflow }
+      // each term and the running sum stay below 10^18, so nothing wraps
+      else if (digit >= Pow10(18 - dweight)) return UnscaledOverflow
+      else abs += digit * Pow10(dweight)
+      if (abs >= Pow10(18)) return UnscaledOverflow
+      i += 1
+    }
+    abs * sign
+  }
+
+  /** The sign word of a wire numeric as ±1; NaN and ±Inf reject. */
+  private def numericSign(word: Int): Int = word match {
+    case NumericPos => 1
+    case NumericNeg => -1
+    case NumericNaN => throw new IllegalArgumentException("Cannot convert numeric NaN")
+    case NumericPInf => throw new IllegalArgumentException("Cannot convert numeric +Inf")
+    case NumericNInf => throw new IllegalArgumentException("Cannot convert numeric -Inf")
+    case other => throw new IllegalArgumentException(s"Unexpected numeric sign: $other")
   }
 }

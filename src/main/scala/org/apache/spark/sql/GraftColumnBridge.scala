@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{Decimal, StructType}
 
 /** Bridge into the `private[sql]` Column constructor so graft's native
   * Catalyst expressions (e.g. [[graft.functions.DotProduct]]) can be used
@@ -20,6 +23,21 @@ object GraftColumnBridge {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
     cs.internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** A DataFrame over rows already in Catalyst's internal form, matching
+    * `schema` — what a source that decodes straight to `InternalRow` hands
+    * Spark instead of external `Row`s and their encoder.
+    */
+  def fromInternalRows(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `d` at `precision`/`scale` through Spark's own conversion check: on
+    * overflow NULL, or the ANSI `NUMERIC_VALUE_OUT_OF_RANGE` error when
+    * `nullOnOverflow` is false.
+    */
+  def toPrecision(d: Decimal, precision: Int, scale: Int, nullOnOverflow: Boolean): Decimal =
+    d.toPrecision(precision, scale, Decimal.ROUND_HALF_UP, nullOnOverflow)
 
   private def intLit(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v

@@ -5,38 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property tests for the PG numeric wire decode: an independent encoder
-  * (string-based base-10000 grouping, written here in the test) feeds
+  * ([[PgWire.numeric]], string-based base-10000 grouping) feeds
   * random decimals through [[PgTypeMapping.pgNumericToUnscaled]]; the
   * result must equal the value truncated toward zero at the target scale —
   * the reference's semantic (pg_numeric.rs:51-59 discards the remainder).
   */
 class NumericPropertySpec extends AnyFunSuite {
 
-  /** Encode a BigDecimal into the PG binary numeric layout. */
-  private def encode(v: BigDecimal): Array[Byte] = {
-    val neg = v.signum < 0
-    val abs = v.abs
-    val s = abs.underlying().toPlainString
-    val (intPart, fracPart) = s.span(_ != '.') match {
-      case (i, f) => (i, f.drop(1))
-    }
-    val intPad = "0" * ((4 - intPart.length % 4) % 4) + intPart
-    val fracPad = fracPart + "0" * ((4 - fracPart.length % 4) % 4)
-    var groups = (intPad + fracPad).grouped(4).map(_.toInt).toVector
-    var weight = intPad.length / 4 - 1
-    // strip leading zero groups (weight shrinks), then trailing zero groups
-    while (groups.length > 1 && groups.head == 0) { groups = groups.tail; weight -= 1 }
-    while (groups.length > 1 && groups.last == 0) groups = groups.init
-    if (groups == Vector(0)) { groups = Vector(); weight = 0 }
-    val out = new Array[Byte](8 + 2 * groups.length)
-    def put16(i: Int, x: Int): Unit = { out(i) = ((x >> 8) & 0xff).toByte; out(i + 1) = (x & 0xff).toByte }
-    put16(0, groups.length)
-    put16(2, weight & 0xffff)
-    put16(4, if (neg) 0x4000 else 0x0000)
-    put16(6, math.max(0, v.scale))
-    groups.zipWithIndex.foreach { case (g, i) => put16(8 + 2 * i, g) }
-    out
-  }
+  private def encode(v: BigDecimal): Array[Byte] = PgWire.numeric(v)
 
   test("decode(encode(v), s) == truncate-toward-zero(v * 10^s) for random decimals") {
     val gen = for {
@@ -70,5 +46,48 @@ class NumericPropertySpec extends AnyFunSuite {
     ).foreach { case (v, rs, want) =>
       assert(PgTypeMapping.pgNumericToUnscaled(encode(v), rs) == want, s"v=$v")
     }
+  }
+
+  test("the Long fast path equals pgNumericToUnscaled wherever its result fits 18 digits") {
+    // magnitudes from 0 to 30 digits at scales 0–20 straddle the 10^18
+    // limit from both sides; the value sits at a random offset of a larger
+    // buffer, as it does inside a COPY stream
+    val gen = for {
+      digits <- Gen.chooseNum(1, 30)
+      unscaled <- Gen.listOfN(digits, Gen.numChar).map(ds => BigInt(ds.mkString))
+      negative <- Gen.oneOf(true, false)
+      scale <- Gen.chooseNum(0, 20)
+      resultScale <- Gen.chooseNum(0, 20)
+      pad <- Gen.chooseNum(0, 5)
+    } yield (BigDecimal(if (negative) -unscaled else unscaled, scale), resultScale, pad)
+    val limit = BigInt(10).pow(18)
+    val prop = Prop.forAll(gen) { t =>
+      val (v, resultScale, pad) = t
+      val wire = encode(v)
+      val buf = Array.fill[Byte](pad)(0x55) ++ wire ++ Array.fill[Byte](pad)(0x55)
+      val big = PgTypeMapping.pgNumericToUnscaled(wire, resultScale)
+      val fast = PgTypeMapping.pgNumericToUnscaledLong(buf, pad, wire.length, resultScale)
+      if (big.abs < limit) fast == big.toLong
+      else fast == PgTypeMapping.UnscaledOverflow
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1000), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("the Long fast path rejects NaN, infinities and short buffers like pgNumericToUnscaled") {
+    Seq(0xC000 -> "NaN", 0xD000 -> "+Inf", 0xF000 -> "-Inf", 0x1234 -> "sign").foreach {
+      case (word, what) =>
+        val b = PgWire.special(word)
+        val slow = intercept[IllegalArgumentException](PgTypeMapping.pgNumericToUnscaled(b, 2))
+        val fast = intercept[IllegalArgumentException](
+          PgTypeMapping.pgNumericToUnscaledLong(b, 0, b.length, 2))
+        assert(fast.getMessage == slow.getMessage && fast.getMessage.contains(what))
+    }
+    val short = encode(BigDecimal("12.5")).take(6)
+    intercept[IllegalArgumentException](PgTypeMapping.pgNumericToUnscaledLong(short, 0, 6, 2))
+    // a digit count the buffer does not hold
+    val cut = encode(BigDecimal("12345678.9"))
+    intercept[IllegalArgumentException](
+      PgTypeMapping.pgNumericToUnscaledLong(cut, 0, cut.length - 2, 2))
   }
 }
