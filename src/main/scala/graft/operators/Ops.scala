@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -223,13 +223,8 @@ object Ops {
       out: String, partitions: Int = 0): DataFrame =
     ntileExactMulti(df, n, Seq(metric -> out), tiebreak, partitions)
 
-  /** Rows per range partition of [[ntileExactMulti]]'s rank shuffles:
-    * `spark.graft.rank.rowsPerPartition`, or 1,000,000 when that is unset,
-    * malformed or not positive — a bad override never fails the query.
-    */
-  def rankRowsPerPartition(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.rank.rowsPerPartition")
-      .flatMap(_.trim.toLongOption).filter(_ > 0).getOrElse(1000000L)
+  /** Rows per range partition of [[ntileExactMulti]]'s rank shuffles. */
+  private val RankRowsPerPartition = 1000000L
 
   /** [[ntileExact]] for SEVERAL independent metrics over one frame: ONE
     * census pass (count + per-metric null/NaN guard), then one
@@ -283,11 +278,11 @@ object Ops {
     // metrics × (sample + stats) fixed cost; a 100 TB frame gets MORE
     // partitions than the session constant. Rank values are exact under
     // any partitioning, so results are unchanged. Explicit `partitions`
-    // wins; rows-per-partition overridable for experiments.
-    val rowsPerPart = rankRowsPerPartition(df.sparkSession)
+    // wins.
     val p =
       if (partitions > 0) partitions
-      else math.max(1L, math.min((c + rowsPerPart - 1) / rowsPerPart, 65536L)).toInt
+      else math.max(1L, math.min((c + RankRowsPerPartition - 1) / RankRowsPerPartition,
+        65536L)).toInt
     val scored = (0 until k).foldLeft(withM) { (d, i) =>
       val rkCol = s"__graft_ntile_rank${u}_$i"
       // SQL-standard tile boundaries on the global rank, all literals

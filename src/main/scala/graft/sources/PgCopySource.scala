@@ -140,8 +140,14 @@ object CopyBinary {
     * Every `next()` returns the SAME row object, refilled: a caller that
     * keeps rows beyond the next call (collects, buffers, sorts) must
     * `copy()` each one first.
+    *
+    * `nullOnOverflow`: a numeric exceeding its declared precision reads as
+    * NULL instead of failing. Its default, the active conf's ANSI mode, is
+    * only the session's on the driver or inside a SQL execution, so a
+    * caller that decodes in plain RDD tasks passes it from the driver.
     */
-  def decode(bytes: Array[Byte], cols: Seq[(String, String, Int)]): Iterator[InternalRow] = {
+  def decode(bytes: Array[Byte], cols: Seq[(String, String, Int)],
+      nullOnOverflow: Boolean = !SQLConf.get.ansiEnabled): Iterator[InternalRow] = {
     val buf = ByteBuffer.wrap(bytes)
     val sig = new Array[Byte](Signature.length)
     buf.get(sig)
@@ -149,7 +155,6 @@ object CopyBinary {
     buf.getInt // flags: bit 16 = OIDs included (never set by modern PG)
     val extLen = buf.getInt
     buf.position(buf.position() + extLen)
-    val nullOnOverflow = !SQLConf.get.ansiEnabled
     val writers = cols.map { case (_, t, m) => fieldWriter(t, m, nullOnOverflow) }.toArray
     val row = new UnsafeRowWriter(writers.length)
 
@@ -584,9 +589,10 @@ final case class PgCopyBinarySource(transports: Seq[CopyTransport],
   override def load(spark: SparkSession): DataFrame = {
     require(transports.nonEmpty, "no COPY BINARY streams to load")
     val colsB = cols
+    val nullOnOverflow = !spark.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
     val rows = spark.sparkContext
       .parallelize(transports, transports.size)
-      .flatMap(t => CopyBinary.decode(t.copyOut(), colsB))
+      .flatMap(t => CopyBinary.decode(t.copyOut(), colsB, nullOnOverflow))
     GraftColumnBridge.fromInternalRows(spark, rows, schema)
   }
 }

@@ -250,6 +250,13 @@ class CopyBinaryDecodeSpec extends AnyFunSuite {
       val rows = load()
       assert(rows.map(_.isNullAt(1)) == Seq(true, false))
       assert(rows(1).getDecimal(1) == new java.math.BigDecimal("12345.678"))
+      // a plain RDD job carries no SQL conf to its tasks: the session's
+      // setting still decides
+      val frame = PgCopyBinarySource.fromFiles(Seq(path.toString), c).load(spark)
+      assert(frame.rdd.map(_.isNullAt(1)).collect().toSeq == Seq(true, false))
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      val frameAnsi = PgCopyBinarySource.fromFiles(Seq(path.toString), c).load(spark)
+      intercept[Exception](frameAnsi.rdd.count())
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

@@ -148,23 +148,4 @@ class WindowPropertySpec extends AnyFunSuite {
     val out = graft.operators.Ops.ntileExact(empty, 2, col("m"), col("id"), "t")
     assert(out.count() == 0 && out.columns.contains("t"))
   }
-
-  test("Ops.ntileExact: a malformed or non-positive rows-per-partition override falls back to the default") {
-    val spark = TestSpark.spark
-    val key = "spark.graft.rank.rowsPerPartition"
-    try {
-      Seq("abc" -> 1000000L, "-5" -> 1000000L, "0" -> 1000000L, "1e6" -> 1000000L,
-        " 250 " -> 250L).foreach { case (v, want) =>
-        spark.conf.set(key, v)
-        assert(graft.operators.Ops.rankRowsPerPartition(spark) == want, s"'$v'")
-      }
-      // the query runs on the default instead of failing
-      spark.conf.set(key, "not-a-number")
-      val df = spark.range(0, 100).selectExpr("id", "cast(id % 7 as double) as m")
-      val tiles = graft.operators.Ops.ntileExact(df, 4, col("m"), col("id"), "t")
-        .groupBy("t").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(tiles == Map(1L -> 25L, 2L -> 25L, 3L -> 25L, 4L -> 25L))
-    } finally spark.conf.unset(key)
-    assert(graft.operators.Ops.rankRowsPerPartition(spark) == 1000000L)
-  }
 }
